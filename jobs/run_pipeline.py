@@ -47,11 +47,6 @@ def main() -> None:
              "kernels.TOKEN_WINDOW; ignored with --base-graph)",
     )
     ap.add_argument(
-        "--no-fused", action="store_true",
-        help="run detection and sentence analysis as separate passes "
-             "instead of the fused single-crossing tagged stream",
-    )
-    ap.add_argument(
         "--fused-rejoin", action="store_true",
         help="triples-only fast lane (round 6): fuse decompose+rejoin into "
              "the doc pass (graph.doc_kg_pairs) — the 2.35x/13.2x-bytes "
@@ -105,12 +100,8 @@ def main() -> None:
             else (args.token_window if args.token_window is not None
                   else TOKEN_WINDOW)
         ),
-        fused=not args.no_fused,
         fused_rejoin=args.fused_rejoin,
     )
-    if args.fused_rejoin and args.no_fused:
-        ap.error("--fused-rejoin requires the fused doc pass "
-                 "(drop --no-fused)")
 
     t0 = time.time()
     if args.checkpoint:

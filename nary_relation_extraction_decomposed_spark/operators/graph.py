@@ -1,15 +1,19 @@
 """Document-level entity graph + BFS shortest-path evidence.
 
-This is the applyInPandas spine bound by the north star: the per-document
-graph (adjacency lists) is built INSIDE the UDF from that document's mention
-rows and never exists as a distributed structure — one document's graph
-always fits in one grouped-map invocation (docs are capped at
-MAX_MENTIONS_PER_DOC mentions upstream, deterministically).
+The per-document graph (adjacency lists) is built INSIDE a mapInPandas
+batch from that document's mention rows and never exists as a distributed
+structure — one document's graph always fits in one batch (docs are capped
+at MAX_MENTIONS_PER_DOC mentions upstream, deterministically).
 
-Cogrouped grouped-map: mentions and sentence rows are cogrouped by url, so
-the graph stage consumes exactly one shuffle by url and emits evidence rows.
-At scale the url grouping key is high-cardinality and uniform (one group per
-document) — no skew; AQE coalesces the small post-shuffle partitions.
+Three entry points, one kernel (kernels.bfs_evidence):
+- doc_kg_combined: detection + sentence analysis + BFS in ONE pass over
+  docs(url, text) — run_pipeline's lane; mentions/sentences/evidence are
+  recovered from its union stream by filter+project (*_from_combined).
+- doc_kg_pairs: the same pass also decomposes and rejoins per document,
+  emitting url-level triple pairs (the fused_rejoin lane).
+- doc_graph_subrels: BFS over already-materialized mention + sentence
+  frames (the checkpointed staged lane and the oracle keys): one url
+  shuffle of their tagged union, batch-level groupby with url carry.
 """
 
 from __future__ import annotations
@@ -32,10 +36,6 @@ def _tok_counts(toks_of_sent: dict, n_sents: int) -> list:
         out.append(int(v) if v is not None and v == v else None)
     return out
 
-EVIDENCE_SCHEMA = (
-    "url string, pivot_mid int, other_mid int, slot string, "
-    "path_len int, path array<int>"
-)
 
 # evidence enriched with everything the decompose step needs — emitting these
 # from the BFS stage (the data is already in the chunk) saves three
@@ -44,19 +44,6 @@ EVIDENCE_SUBREL_SCHEMA = (
     "url string, pivot_mid int, pivot_norm string, pivot_sent int, "
     "other_mid int, other_norm string, slot string, pred string, "
     "path_len int, path array<int>"
-)
-
-
-# kind 0 = sentence rows (n_tokens, pred, preds/pred_toks set), kind 1 =
-# FULL mention rows (every MENTIONS_SCHEMA column) — wide enough that
-# mentions_view / sentences_view recover the unfused frames by
-# filter+project, so ONE Python crossing serves graph, ER, and result
-# surfaces
-TAGGED_SCHEMA = (
-    "url string, kind int, sent_id int, mention_id int, ent_id string, "
-    "ent_type string, surface string, surface_norm string, begin int, "
-    "end int, tok_begin int, tok_end int, n_tokens int, pred string, "
-    "preds array<string>, pred_toks array<int>"
 )
 
 
@@ -70,32 +57,42 @@ def doc_graph_subrels(
     co_mention_edges: bool = True,
     token_window: int | None = TOKEN_WINDOW,
 ) -> DataFrame:
-    """Fused evidence + decomposition attributes (EVIDENCE_SUBREL_SCHEMA).
+    """mentions (MENTIONS_SCHEMA) + sentences (SENTENCES_SCHEMA) -> evidence
+    enriched with the decomposition attributes (EVIDENCE_SUBREL_SCHEMA).
 
-    Same tagged-union/sorted mapInPandas machinery as doc_graph_evidence,
-    but the chunk also resolves the pivot's surface_norm, the argument's
-    surface_norm, and the pivot-sentence predicate from rows already present
-    in the chunk — so the binary sub-relation table needs NO joins back to
-    mentions/sentences (pred stays nullable; filter pred IS NOT NULL +
-    subrel = pred#slot gives the decomposition, see triples.subrels_from_
-    evidence). The binary->triple REJOIN is still DataFrame joins."""
+    ONE shuffle: the tagged union of sentence rows (kind 0) and mention rows
+    (kind 1) is hash-partitioned and sorted by url, then mapInPandas runs a
+    pandas groupby per Arrow batch with url-boundary carry between batches
+    (batch-level calls amortize the per-document Python overhead a grouped
+    map would pay). The chunk also resolves the pivot's surface_norm, the
+    argument's surface_norm and the pivot-sentence predicate from rows
+    already present in it — so the binary sub-relation table needs NO joins
+    back to mentions/sentences (pred stays nullable; filter pred IS NOT
+    NULL + subrel = pred#slot gives the decomposition, see
+    triples.subrels_from_evidence).
+
+    num_partitions (default 2x cores) pins the url partitioning width: AQE's
+    bytes-based coalescing would otherwise collapse this small-bytes,
+    CPU-heavy stage onto a handful of cores; an explicit repartition(n, url)
+    is AQE-exempt."""
     import pyspark.sql.functions as F
 
+    if num_partitions is None:
+        num_partitions = mentions.sparkSession.sparkContext.defaultParallelism * 2
+
+    # only the columns the BFS chunk reads: mapInPandas gets no automatic
+    # column pruning, so anything else would ride the Exchange and the
+    # Arrow crossing for nothing
     tagged = sentences.select(
         "url",
         F.lit(0).alias("kind"),
         F.col("sent_id").cast("int").alias("sent_id"),
         F.lit(None).cast("int").alias("mention_id"),
-        F.lit(None).cast("string").alias("ent_id"),
         F.lit(None).cast("string").alias("ent_type"),
-        F.lit(None).cast("string").alias("surface"),
         F.lit(None).cast("string").alias("surface_norm"),
-        F.lit(None).cast("int").alias("begin"),
-        F.lit(None).cast("int").alias("end"),
         F.lit(None).cast("int").alias("tok_begin"),
         F.lit(None).cast("int").alias("tok_end"),
         F.col("n_tokens").cast("int").alias("n_tokens"),
-        F.col("pred"),
         F.col("preds"),
         F.col("pred_toks").cast("array<int>").alias("pred_toks"),
     ).unionByName(
@@ -104,51 +101,14 @@ def doc_graph_subrels(
             F.lit(1).alias("kind"),
             F.col("sent_id").cast("int").alias("sent_id"),
             F.col("mention_id").cast("int").alias("mention_id"),
-            "ent_id",
             "ent_type",
-            "surface",
             "surface_norm",
-            F.col("begin").cast("int").alias("begin"),
-            F.col("end").cast("int").alias("end"),
             F.col("tok_begin").cast("int").alias("tok_begin"),
             F.col("tok_end").cast("int").alias("tok_end"),
             F.lit(None).cast("int").alias("n_tokens"),
-            F.lit(None).cast("string").alias("pred"),
             F.lit(None).cast("array<string>").alias("preds"),
             F.lit(None).cast("array<int>").alias("pred_toks"),
         )
-    )
-    return doc_graph_subrels_tagged(
-        tagged, pivot_type, arg_slots, max_path_len, num_partitions,
-        co_mention_edges, token_window,
-    )
-
-
-def doc_graph_subrels_tagged(
-    tagged: DataFrame,
-    pivot_type: str,
-    arg_slots: list[tuple[str, str]],
-    max_path_len: int = MAX_PATH_LEN,
-    num_partitions: int | None = None,
-    co_mention_edges: bool = True,
-    token_window: int | None = TOKEN_WINDOW,
-) -> DataFrame:
-    """doc_graph_subrels over an ALREADY-TAGGED row stream (TAGGED_SCHEMA:
-    kind 0 = sentence rows, kind 1 = mention rows). This is the fusion
-    entry point: mentions.detect_and_analyze_tagged emits this shape in
-    ONE docs pass, so detection + sentence analysis + graph consume a
-    single Python crossing and a single url shuffle end to end."""
-    if num_partitions is None:
-        num_partitions = tagged.sparkSession.sparkContext.defaultParallelism * 2
-
-    # project to the columns the BFS chunk actually reads BEFORE the url
-    # shuffle: the full tagged stream also carries ent_id/surface/begin/end
-    # for the mentions_view/ER consumers, and mapInPandas gets no automatic
-    # column pruning — without this select those strings ride the Exchange
-    # and the Arrow crossing for nothing
-    tagged = tagged.select(
-        "url", "kind", "sent_id", "mention_id", "ent_type", "surface_norm",
-        "tok_begin", "tok_end", "n_tokens", "preds", "pred_toks",
     )
     tagged = tagged.repartition(num_partitions, "url").sortWithinPartitions(
         "url", "kind", "mention_id"
@@ -245,7 +205,7 @@ def doc_graph_subrels_tagged(
 # 2 = evidence(+decomposition attrs). Everything run_pipeline needs from a
 # document comes out of ONE mapInPandas crossing with NO shuffle (after
 # dedup_latest_text each url is exactly one input row, so no url grouping
-# is required at all — the tagged path's repartition+sort exists only for
+# is required at all — doc_graph_subrels' repartition+sort exists only for
 # inputs whose per-url rows arrive scattered).
 COMBINED_SCHEMA = (
     "url string, kind int, sent_id int, mention_id int, ent_id string, "
@@ -274,7 +234,7 @@ def doc_kg_combined(
 
     Requires one row per url (dedup_latest_text's contract): each input row
     is a complete document, so the per-doc graph never spans partitions and
-    the tagged path's repartition(n, url) + sortWithinPartitions + batch
+    doc_graph_subrels' repartition(n, url) + sortWithinPartitions + batch
     carry are all unnecessary. Returns the COMBINED_SCHEMA union stream;
     mentions_/sentences_/evidence_from_combined below recover the unfused
     frames by filter+project. Semantics are pinned equal to the staged
@@ -566,196 +526,4 @@ def evidence_from_combined(combined: DataFrame) -> DataFrame:
     return combined.filter(F.col("kind") == 2).select(
         "url", "pivot_mid", "pivot_norm", "pivot_sent", "other_mid",
         "other_norm", "slot", "pred", "path_len", "path",
-    )
-
-
-def doc_graph_evidence(
-    mentions: DataFrame,
-    sentences: DataFrame,
-    pivot_type: str,
-    arg_slots: list[tuple[str, str]],
-    max_path_len: int = MAX_PATH_LEN,
-    num_partitions: int | None = None,
-    co_mention_edges: bool = True,
-    token_window: int | None = TOKEN_WINDOW,
-) -> DataFrame:
-    """Fast path: ONE shuffle (tagged union of mention+sentence rows,
-    hash-partitioned and sorted by url), then mapInPandas with a pandas
-    groupby per Arrow batch and url-boundary carry between batches.
-
-    Why not cogrouped applyInPandas (kept below as
-    doc_graph_evidence_cogroup): grouped-map pays one Python call + frame
-    construction PER DOCUMENT (~1.5 ms) — measured overhead-bound and
-    non-scaling on small docs. Batch-level calls amortize that to ~50 us
-    per group; semantics are identical (same kernel, same n_sents)."""
-    if num_partitions is None:
-        num_partitions = mentions.sparkSession.sparkContext.defaultParallelism * 2
-
-    import pyspark.sql.functions as F
-
-    tagged = (
-        sentences.select(
-            "url",
-            F.lit(0).alias("kind"),
-            F.col("sent_id").cast("int").alias("sent_id"),
-            F.lit(None).cast("int").alias("mention_id"),
-            F.lit(None).cast("string").alias("ent_type"),
-            F.lit(None).cast("int").alias("tok_begin"),
-            F.lit(None).cast("int").alias("tok_end"),
-            F.col("n_tokens").cast("int").alias("n_tokens"),
-        )
-        .unionByName(
-            mentions.select(
-                "url",
-                F.lit(1).alias("kind"),
-                F.col("sent_id").cast("int").alias("sent_id"),
-                F.col("mention_id").cast("int").alias("mention_id"),
-                "ent_type",
-                F.col("tok_begin").cast("int").alias("tok_begin"),
-                F.col("tok_end").cast("int").alias("tok_end"),
-                F.lit(None).cast("int").alias("n_tokens"),
-            )
-        )
-        .repartition(num_partitions, "url")
-        .sortWithinPartitions("url", "kind", "mention_id")
-    )
-
-    cols = ["url", "pivot_mid", "other_mid", "slot", "path_len", "path"]
-
-    def process_chunk(pdf: pd.DataFrame, out: dict) -> None:
-        for url, grp in pdf.groupby("url", sort=False):
-            mrows = grp[grp["kind"] == 1]
-            if mrows.empty:
-                continue
-            srows = grp[grp["kind"] == 0]
-            n_sents = len(srows)
-            if n_sents == 0:
-                n_sents = int(mrows["sent_id"].max()) + 1
-            toks_of_sent = dict(zip(srows["sent_id"], srows["n_tokens"]))
-            sent_tok_counts = _tok_counts(toks_of_sent, n_sents)
-            ms = [
-                {"mention_id": int(mid), "ent_type": et, "sent_id": int(sid),
-                 "tok_begin": int(tb), "tok_end": int(te)}
-                for mid, et, sid, tb, te in zip(
-                    mrows["mention_id"], mrows["ent_type"], mrows["sent_id"],
-                    mrows["tok_begin"], mrows["tok_end"],
-                )
-            ]
-            ms.sort(key=lambda m: m["mention_id"])
-            for r in bfs_evidence(n_sents, ms, pivot_type, arg_slots, max_path_len,
-                                  co_mention_edges, token_window,
-                                  sent_tok_counts):
-                out["url"].append(url)
-                out["pivot_mid"].append(r["pivot_mid"])
-                out["other_mid"].append(r["other_mid"])
-                out["slot"].append(r["slot"])
-                out["path_len"].append(r["path_len"])
-                out["path"].append(r["path"])
-
-    def to_frame(out: dict) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "url": pd.Series(out["url"], dtype=object),
-                "pivot_mid": pd.Series(out["pivot_mid"], dtype="int32"),
-                "other_mid": pd.Series(out["other_mid"], dtype="int32"),
-                "slot": pd.Series(out["slot"], dtype=object),
-                "path_len": pd.Series(out["path_len"], dtype="int32"),
-                "path": pd.Series(out["path"], dtype=object),
-            },
-            columns=cols,
-        )
-
-    def batches(it):
-        carry: pd.DataFrame | None = None
-        for pdf in it:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            # hold back the (possibly incomplete) last url for the next batch
-            last_url = pdf["url"].iat[-1]
-            mask = pdf["url"].to_numpy() == last_url
-            carry = pdf[mask]
-            head = pdf[~mask]
-            if len(head):
-                out = {c: [] for c in cols}
-                process_chunk(head, out)
-                yield to_frame(out)
-        if carry is not None and len(carry):
-            out = {c: [] for c in cols}
-            process_chunk(carry, out)
-            yield to_frame(out)
-
-    return tagged.mapInPandas(batches, schema=EVIDENCE_SCHEMA)
-
-
-def doc_graph_evidence_cogroup(
-    mentions: DataFrame,
-    sentences: DataFrame,
-    pivot_type: str,
-    arg_slots: list[tuple[str, str]],
-    max_path_len: int = MAX_PATH_LEN,
-    num_partitions: int | None = None,
-    co_mention_edges: bool = True,
-    token_window: int | None = TOKEN_WINDOW,
-) -> DataFrame:
-    """mentions (MENTIONS_SCHEMA) x sentences (SENTENCES_SCHEMA) cogrouped by
-    url -> evidence rows (EVIDENCE_SCHEMA) for candidate (pivot, arg) pairs
-    with BFS shortest path <= max_path_len edges.
-
-    num_partitions (default 2x cores) pins the url partitioning width for
-    the Python stage: AQE's bytes-based coalescing would otherwise collapse
-    a small-bytes/high-CPU cogroup onto a handful of cores (measured 15x
-    slowdown at sf0.1); explicit repartition(n, url) is AQE-exempt AND
-    already satisfies the cogroup's required distribution, so no second
-    shuffle is inserted."""
-    if num_partitions is None:
-        num_partitions = mentions.sparkSession.sparkContext.defaultParallelism * 2
-    mentions = mentions.repartition(num_partitions, "url")
-    sentences = sentences.repartition(num_partitions, "url")
-
-    def per_doc(key: tuple, m_pdf: pd.DataFrame, s_pdf: pd.DataFrame) -> pd.DataFrame:
-        url = key[0]
-        cols = ["url", "pivot_mid", "other_mid", "slot", "path_len", "path"]
-        if m_pdf.empty:
-            rows: list[dict] = []
-        else:
-            n_sents = int(s_pdf["sent_id"].max()) + 1 if not s_pdf.empty else (
-                int(m_pdf["sent_id"].max()) + 1
-            )
-            toks_of_sent = (
-                dict(zip(s_pdf["sent_id"], s_pdf["n_tokens"]))
-                if not s_pdf.empty else {}
-            )
-            sent_tok_counts = _tok_counts(toks_of_sent, n_sents)
-            ms = [
-                {"mention_id": int(r.mention_id), "ent_type": r.ent_type,
-                 "sent_id": int(r.sent_id), "tok_begin": int(r.tok_begin),
-                 "tok_end": int(r.tok_end)}
-                for r in m_pdf.itertuples()
-            ]
-            ms.sort(key=lambda m: m["mention_id"])
-            rows = bfs_evidence(n_sents, ms, pivot_type, arg_slots, max_path_len,
-                                  co_mention_edges, token_window,
-                                  sent_tok_counts)
-        return pd.DataFrame(
-            {
-                "url": pd.Series([url] * len(rows), dtype=object),
-                "pivot_mid": pd.Series([r["pivot_mid"] for r in rows], dtype="int32"),
-                "other_mid": pd.Series([r["other_mid"] for r in rows], dtype="int32"),
-                "slot": pd.Series([r["slot"] for r in rows], dtype=object),
-                "path_len": pd.Series([r["path_len"] for r in rows], dtype="int32"),
-                # dtype=object so Arrow sees Python lists, not a numpy block
-                "path": pd.Series([r["path"] for r in rows], dtype=object),
-            },
-            columns=cols,
-        )
-
-    return (
-        mentions.select(
-            "url", "mention_id", "ent_type", "sent_id", "tok_begin", "tok_end"
-        )
-        .groupBy("url")
-        .cogroup(sentences.select("url", "sent_id", "n_tokens").groupBy("url"))
-        .applyInPandas(per_doc, schema=EVIDENCE_SCHEMA)
     )

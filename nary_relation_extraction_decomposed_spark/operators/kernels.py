@@ -215,9 +215,8 @@ def nearest_pred(
 
     Distance = 0 if the token is inside the span, else gap to the nearest
     span edge; ties -> the EARLIER token position. None when the sentence
-    has no pred tokens. The SQL twin (zip_with + array_min over
-    struct(dist, tok, pred)) lives in triples.binary_subrels; the DuckDB
-    twin in plans/q_kg.py's decompose_nary oracle."""
+    has no pred tokens. The DuckDB twin is plans/q_kg.py's decompose_nary
+    oracle."""
     # explicit len checks: preds arrives as a numpy array from Arrow batches,
     # whose truthiness raises for length > 1
     if preds is None or pred_toks is None or len(preds) == 0:

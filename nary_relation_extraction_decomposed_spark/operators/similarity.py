@@ -20,10 +20,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.functions import broadcast
 
-# topmost Exchange line of a physical-plan string, e.g.
-# "Exchange hashpartitioning(id#5L, 64), REPARTITION_BY_COL, [plan_id=7]"
-_RE_TOP_EXCHANGE = re.compile(
-    r"Exchange hashpartitioning\((.+?), (\d+)\)([^\n]*)"
+# a keyed explicit repartition on a physical-plan Exchange line, e.g.
+# "Exchange hashpartitioning(id#5L, 64), REPARTITION_BY_NUM, [plan_id=7]";
+# the lookbehind keeps BroadcastExchange / ReusedExchange lines out
+_RE_KEYED_REPARTITION_BY_NUM = re.compile(
+    r"(?<!\w)Exchange hashpartitioning\((.+?), (\d+)\), REPARTITION_BY_NUM\b"
 )
 
 
@@ -42,21 +43,24 @@ def _widen_if_narrow(df: DataFrame, key_col: str) -> DataFrame:
     AQE-coalesce-exempt (kills the small-shuffle starvation pattern) and
     clusters by `key_col`, which every caller's downstream groupBy/window
     reuses, and it is strictly cheaper than the probe's full double
-    execution — UNLESS the plan's topmost exchange is already an explicit
-    repartition by exactly `key_col` at >= defaultParallelism (ADVICE r6:
-    an input that just explicitly shuffled wide on the same key was paying
-    a second full exchange here, and possibly a width DOWNSHIFT). Only
-    explicit-repartition (REPARTITION_BY_NUM/_COL) exchanges qualify: they are
-    AQE-exempt, so the printed width is the runtime width — a groupBy/join
-    exchange's printed width is pre-coalesce fiction."""
+    execution — UNLESS the plan's FIRST (topmost) Exchange line is already
+    `hashpartitioning(key_col, n >= defaultParallelism)` with
+    REPARTITION_BY_NUM (ADVICE r6: an input that just explicitly shuffled
+    wide on the same key was paying a second full exchange here). Only
+    REPARTITION_BY_NUM qualifies: it is the one AQE-exempt exchange, so its
+    printed width is the runtime width. A REPARTITION_BY_COL exchange
+    (repartition by column, no count) is sized by spark.sql.shuffle.
+    partitions and AQE may coalesce it, and a groupBy/join exchange's
+    printed width is pre-coalesce fiction."""
     nparts = df.sparkSession.sparkContext.defaultParallelism
     plan = df._jdf.queryExecution().sparkPlan().toString()
     if "Exchange" not in plan:
         if df.rdd.getNumPartitions() >= nparts:
             return df
         return df.repartition(nparts, F.col(key_col))
-    m = _RE_TOP_EXCHANGE.search(plan)
-    if m and "REPARTITION_BY_" in m.group(0):  # BY_NUM / BY_COL, both AQE-exempt
+    top = next(line for line in plan.splitlines() if "Exchange" in line)
+    m = _RE_KEYED_REPARTITION_BY_NUM.search(top)
+    if m:
         cols = [c.strip().split("#")[0] for c in m.group(1).split(",")]
         if cols == [key_col] and int(m.group(2)) >= nparts:
             return df

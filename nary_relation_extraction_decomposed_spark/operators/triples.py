@@ -22,11 +22,14 @@ TRIPLES_COLS = ("subj", "pred", "obj", "support")
 
 
 def subrels_from_evidence(enriched: DataFrame) -> DataFrame:
-    """Binary sub-relations from the FUSED evidence (graph.doc_graph_subrels
-    output, EVIDENCE_SUBREL_SCHEMA): the decomposition is a filter+project —
-    the graph stage already resolved surfaces and the pivot-sentence
-    predicate, so no joins are needed here. Same output schema/rows as
-    binary_subrels."""
+    """Binary sub-relations from the enriched evidence (EVIDENCE_SUBREL_SCHEMA:
+    graph.doc_graph_subrels or graph.evidence_from_combined): one row per
+    accepted sub-relation (url, pivot_mid, pivot_norm, other_mid,
+    other_norm, slot, pred, subrel, path_len). The decomposition is a
+    filter+project — the graph stage already resolved surfaces and the
+    pivot-sentence predicate (kernels.nearest_pred), so no joins are needed
+    here; the label is subrel = pred#slot, and pairs whose pivot sentence
+    has no predicate token (pred NULL) are dropped."""
     return enriched.filter(F.col("pred").isNotNull()).select(
         "url",
         "pivot_mid",
@@ -37,75 +40,6 @@ def subrels_from_evidence(enriched: DataFrame) -> DataFrame:
         "pred",
         F.concat_ws("#", F.col("pred"), F.col("slot")).alias("subrel"),
         "path_len",
-    )
-
-
-def binary_subrels(
-    evidence: DataFrame, mentions: DataFrame, sentences: DataFrame
-) -> DataFrame:
-    """evidence x mentions x sentences -> one row per accepted binary
-    sub-relation: (url, pivot_mid, pivot_norm, other_mid, other_norm, slot,
-    pred, subrel, path_len).
-
-    The sub-relation label is pred#slot where pred is the pred-vocab token
-    NEAREST the PIVOT mention's token span within its sentence (ties ->
-    earliest token) — the SQL twin of kernels.nearest_pred, computed
-    JVM-side with zip_with + array_min over struct(dist, tok, pred)
-    (structs order field-wise, so the min is argmin by (dist, tok)). Pairs
-    whose pivot sentence has no predicate token are dropped (no relation
-    signal).
-    """
-    piv = mentions.select(
-        F.col("url").alias("p_url"),
-        F.col("mention_id").alias("p_mid"),
-        F.col("surface_norm").alias("pivot_norm"),
-        F.col("sent_id").alias("pivot_sent"),
-        F.col("tok_begin").alias("p_tb"),
-        F.col("tok_end").alias("p_te"),
-    )
-    oth = mentions.select(
-        F.col("url").alias("o_url"),
-        F.col("mention_id").alias("o_mid"),
-        F.col("surface_norm").alias("other_norm"),
-    )
-    sent = sentences.select(
-        F.col("url").alias("s_url"),
-        F.col("sent_id").alias("s_sent"),
-        F.col("preds"),
-        F.col("pred_toks"),
-    ).filter(F.size("preds") > 0)
-
-    nearest = F.array_min(
-        F.zip_with(
-            "preds",
-            "pred_toks",
-            lambda p, t: F.struct(
-                F.greatest(
-                    F.col("p_tb") - t, t - F.col("p_te") + 1, F.lit(0)
-                ).alias("d"),
-                t.alias("t"),
-                p.alias("p"),
-            ),
-        )
-    )["p"]
-
-    return (
-        evidence
-        .join(piv, (F.col("url") == F.col("p_url")) & (F.col("pivot_mid") == F.col("p_mid")))
-        .join(oth, (F.col("url") == F.col("o_url")) & (F.col("other_mid") == F.col("o_mid")))
-        .join(sent, (F.col("url") == F.col("s_url")) & (F.col("pivot_sent") == F.col("s_sent")))
-        .withColumn("pred", nearest)
-        .select(
-            "url",
-            "pivot_mid",
-            "pivot_norm",
-            "other_mid",
-            "other_norm",
-            "slot",
-            "pred",
-            F.concat_ws("#", F.col("pred"), F.col("slot")).alias("subrel"),
-            "path_len",
-        )
     )
 
 
@@ -221,83 +155,6 @@ def rejoin_nary(
         ).alias("t"),
     ).select("url", "t.subj_norm", "t.pred", "t.obj_norm")
     return _canonicalize_and_support(pairs, canon_map, url_level)
-
-
-def rejoin_triples_grouped(
-    subrels: DataFrame,
-    pred_rules: DataFrame,
-    canon_map: DataFrame | None = None,
-) -> DataFrame:
-    """Semantically identical to rejoin_triples, different physical shape:
-    ONE ObjectHashAggregate shuffle on (url, pivot_mid, pred) collecting the
-    per-slot argument lists, then the n-ary instance cross product expands
-    IN-ARRAY (bounded: arguments per document are capped upstream at
-    MAX_MENTIONS_PER_DOC); subrels is consumed exactly once, so no lineage
-    checkpoint is needed.
-
-    MEASURED (5.3M subrels, local[16], warm): 12.2 s vs 7.7 s for the SMJ
-    path — collect_list aggregation is object-based (no whole-stage
-    codegen) and loses to the codegen'd sort-merge join despite the extra
-    shuffle, so rejoin_triples stays the default. Kept as the measured
-    alternative (the trade flips when shuffle I/O, not CPU, is the
-    bottleneck — e.g. wide rows or remote shuffle storage); equivalence is
-    pinned by tests/test_nary_arity.py::test_grouped_rejoin_equivalent.
-    """
-    grouped = (
-        subrels.filter(F.col("slot").isin("a", "b"))
-        .groupBy("url", "pivot_mid", "pred")
-        .agg(
-            F.first("pivot_norm").alias("pivot_norm"),
-            F.collect_list(
-                F.when(F.col("slot") == "a",
-                       F.struct("other_norm", "subrel"))
-            ).alias("a_list"),
-            F.collect_list(
-                F.when(F.col("slot") == "b",
-                       F.struct("other_norm", "subrel"))
-            ).alias("b_list"),
-        )
-        .filter((F.size("a_list") > 0) & (F.size("b_list") > 0))
-    )
-    cross = F.flatten(
-        F.transform(
-            F.col("a_list"),
-            lambda a: F.transform(
-                F.col("b_list"),
-                lambda b: F.struct(
-                    a["other_norm"].alias("a_norm"),
-                    a["subrel"].alias("subrel_a"),
-                    b["other_norm"].alias("b_norm"),
-                    b["subrel"].alias("subrel_b"),
-                ),
-            ),
-        )
-    )
-    inst = grouped.select(
-        "url", "pivot_norm", "pred", F.explode(cross).alias("i")
-    ).select(
-        "url", "pivot_norm", "pred",
-        "i.a_norm", "i.subrel_a", "i.b_norm", "i.subrel_b",
-    )
-    joined = inst.join(broadcast(pred_rules), ["subrel_a", "subrel_b"])
-    pairs = joined.select(
-        "url",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("pivot_norm").alias("subj_norm"),
-                    F.col("pred_a").alias("pred"),
-                    F.col("a_norm").alias("obj_norm"),
-                ),
-                F.struct(
-                    F.col("pivot_norm").alias("subj_norm"),
-                    F.col("pred_b").alias("pred"),
-                    F.col("b_norm").alias("obj_norm"),
-                ),
-            )
-        ).alias("t"),
-    ).select("url", "t.subj_norm", "t.pred", "t.obj_norm")
-    return _canonicalize_and_support(pairs, canon_map)
 
 
 def pairs_to_triples(

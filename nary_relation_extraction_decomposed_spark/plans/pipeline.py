@@ -4,20 +4,20 @@ pages(url, warc_ts, html, text, lang)
   -> filter (lang/null, pre-UDF so it pushes into the scan)
   -> dedup latest per url (deterministic row_number)
   -> resolve text (frozen extractor, mapInPandas; drops html)
-  -> FUSED combined pass (default): mention detection + sentence analysis
-     + per-doc graph BFS in ONE mapInPandas (broadcast gazetteer) — zero
-     shuffles docs->evidence, since dedup leaves one row per url;
-     mentions/sentences/evidence recovered by filter+project. Unfused
-     staged path kept for checkpointing (and for tagged streams whose
-     per-url rows arrive scattered: graph.doc_graph_subrels_tagged).
-     Enriched graph: co-mention + token-window edges, default ON.
-  -> binary sub-relations (DataFrame joins; this IS the n-ary decomposition)
+  -> combined doc pass: mention detection + sentence analysis + per-doc
+     graph BFS in ONE mapInPandas (broadcast gazetteer) — zero shuffles
+     docs->evidence, since dedup leaves one row per url; mentions/
+     sentences/evidence recovered by filter+project. Enriched graph:
+     co-mention + token-window edges, default ON.
+  -> binary sub-relations (filter+project of the evidence: the n-ary
+     decomposition)
   -> ER canonical map (MinHash-LSH + connected components)
   -> rejoin into (subj, pred, obj) triples + support
 
 Every stage is a DataFrame in -> DataFrame out function; plans/checkpoint.py
 wraps stages with the per-stage parquet checkpoint + manifest for
-kill-resume.
+kill-resume (run_pipeline_checkpointed runs the same chain as separate
+detection / sentence / graph stages so each one checkpoints on its own).
 """
 
 from __future__ import annotations
@@ -66,14 +66,6 @@ class PipelineConfig:
     # see operators/kernels.bfs_evidence
     co_mention_edges: bool = True
     token_window: int | None = TOKEN_WINDOW
-    # fused default: detection + sentence analysis + graph BFS run in ONE
-    # mapInPandas over the deduped docs (zero shuffles docs->evidence;
-    # valid because dedup leaves one row per url); mentions/sentences/
-    # evidence/ER all recover from the combined stream by filter+project.
-    # The checkpointed runner keeps unfused stages unless fused_rejoin is
-    # set (then it checkpoints the pairs lane; see
-    # run_pipeline_checkpointed).
-    fused: bool = True
     # round 6: ALSO fuse decompose + rejoin + per-doc triple dedup into the
     # doc mapInPandas (graph.doc_kg_pairs) — the rejoin key
     # (url, pivot_mid, pred) never leaves a document, so the staged path's
@@ -287,36 +279,26 @@ def run_pipeline(
     else:
         docs = textprep.dedup_latest_text(resolved, num_partitions=width).persist()
 
-    if config.fused:
-        # ONE Python crossing and ZERO shuffles from docs to evidence:
-        # dedup_latest_text leaves exactly one row per url, so detection +
-        # sentence analysis + per-doc graph BFS all run inside a single
-        # mapInPandas (graph.doc_kg_combined); mentions/sentences/evidence
-        # and the ER surface recover by filter+project. persist: the
-        # combined stream is referenced by all of them.
-        combined = graph.doc_kg_combined(
-            docs, gazetteer, list(config.pred_vocab),
-            config.pivot_type, list(config.arg_slots),
-            config.max_path_len,
-            co_mention_edges=config.co_mention_edges,
-            token_window=config.token_window,
-        ).persist()
-        ments = graph.mentions_from_combined(combined)
-        sents = graph.sentences_from_combined(combined)
-        ev = graph.evidence_from_combined(combined)
-    else:
-        ments = M.detect_mentions(docs, gazetteer)
-        sents = M.analyze_sentences(docs, list(config.pred_vocab))
-        ev = graph.doc_graph_subrels(
-            ments, sents, config.pivot_type, list(config.arg_slots),
-            config.max_path_len, num_partitions=width,
-            co_mention_edges=config.co_mention_edges,
-            token_window=config.token_window,
-        )
+    # ONE Python crossing and ZERO shuffles from docs to evidence:
+    # dedup_latest_text leaves exactly one row per url, so detection +
+    # sentence analysis + per-doc graph BFS all run inside a single
+    # mapInPandas (graph.doc_kg_combined); mentions/sentences/evidence
+    # and the ER surface recover by filter+project. persist: the
+    # combined stream is referenced by all of them.
+    combined = graph.doc_kg_combined(
+        docs, gazetteer, list(config.pred_vocab),
+        config.pivot_type, list(config.arg_slots),
+        config.max_path_len,
+        co_mention_edges=config.co_mention_edges,
+        token_window=config.token_window,
+    ).persist()
+    ments = graph.mentions_from_combined(combined)
+    sents = graph.sentences_from_combined(combined)
+    ev = graph.evidence_from_combined(combined)
     subrels = T.subrels_from_evidence(ev)
 
     canon = er.canonical_map(ments.select("surface_norm")) if config.canonicalize else None
-    if config.fused and config.fused_rejoin:
+    if config.fused_rejoin:
         # triples-only fast lane (see fused_rejoin docstring): ONE doc
         # mapInPandas emits per-doc-distinct pairs; the support agg is the
         # only corpus exchange. Equivalence to the staged chain is pinned

@@ -13,10 +13,10 @@ import pyspark.sql.functions as F
 
 from ..operators.connected_components import connected_components
 from ..operators.er import canonical_map
-from ..operators.graph import doc_graph_evidence
+from ..operators.graph import doc_graph_subrels
 from ..operators.mentions import analyze_sentences, detect_mentions
 from ..operators.textprep import resolve_text
-from ..operators.triples import binary_subrels
+from ..operators.triples import subrels_from_evidence
 from ..functions.hashing import lsh_band_hashes_col, minhash_signature_col
 from ..functions.textnorm import shingles_col
 from ..sources.tables import pages_from_documents
@@ -118,13 +118,14 @@ FROM mentions
 
 @query("doc_graph_bfs")
 def doc_graph_bfs_q(spark, sf_dir):
-    """Tagged mapInPandas graph+BFS. Driver docs are single-sentence, so
-    with the default-enriched graph (co-mention edges) every (PIV, ARG)
-    pair is a DIRECT length-1 path — SQL-expressible."""
+    """Tagged mapInPandas graph+BFS (graph.doc_graph_subrels). Driver docs
+    are single-sentence, so with the default-enriched graph (co-mention
+    edges) every (PIV, ARG) pair is a DIRECT length-1 path —
+    SQL-expressible."""
     docs = _docs(spark, sf_dir)
     m = detect_mentions(docs, _gaz_df(spark))
     s = analyze_sentences(docs, PRED_WORDS)
-    ev = doc_graph_evidence(m, s, "PIV", [("ARGA", "a"), ("ARGB", "b")])
+    ev = doc_graph_subrels(m, s, "PIV", [("ARGA", "a"), ("ARGB", "b")])
     return ev.select(
         "url",
         F.col("pivot_mid").cast("bigint").alias("pivot_mid"),
@@ -145,13 +146,15 @@ FROM mentions p JOIN mentions o
 
 @query("decompose_nary")
 def decompose_nary_q(spark, sf_dir):
-    """Binary sub-relation construction (the n-ary decomposition): evidence
-    x mentions x sentence-predicates via DataFrame joins."""
+    """Binary sub-relation construction (the n-ary decomposition): the
+    production filter+project of the enriched evidence
+    (triples.subrels_from_evidence over graph.doc_graph_subrels)."""
     docs = _docs(spark, sf_dir)
     m = detect_mentions(docs, _gaz_df(spark))
     s = analyze_sentences(docs, PRED_WORDS)
-    ev = doc_graph_evidence(m, s, "PIV", [("ARGA", "a"), ("ARGB", "b")])
-    sr = binary_subrels(ev, m, s)
+    sr = subrels_from_evidence(
+        doc_graph_subrels(m, s, "PIV", [("ARGA", "a"), ("ARGB", "b")])
+    )
     return sr.select(
         "url",
         F.col("pivot_mid").cast("bigint").alias("pivot_mid"),

@@ -515,6 +515,24 @@ def test_widen_if_narrow_probe_vs_exchange_dispatch(spark):
         r["vec_id"] for r in shuffled.collect()
     )
 
+    # (d) repartition by column WITHOUT a count (REPARTITION_BY_COL, sized
+    # by spark.sql.shuffle.partitions) -> AQE may coalesce it, so even at
+    # >= defaultParallelism it is re-widened with an explicit count
+    by_col = em.repartition(F.col("vec_id"))
+    out = S._widen_if_narrow(by_col, "vec_id")
+    assert out is not by_col
+    assert "REPARTITION_BY_NUM" in out._jdf.queryExecution().sparkPlan().toString()
+
+    # (e) an explicit keyed repartition at full width is trusted as-is ...
+    by_num = em.repartition(nparts, F.col("vec_id"))
+    assert S._widen_if_narrow(by_num, "vec_id") is by_num
+    # ... but only when it is the FIRST exchange: a narrow round-robin
+    # repartition above it decides the width the caller gets
+    narrowed = by_num.withColumn("x", F.col("vec_id") + 1).repartition(3)
+    out = S._widen_if_narrow(narrowed, "vec_id")
+    assert out is not narrowed
+    assert out.rdd.getNumPartitions() == nparts
+
 
 def test_hyperplane_buckets_input_partitioning_invariant(spark):
     """Round-6: hyperplane_buckets repartitions under-partitioned inputs

@@ -6,8 +6,8 @@
   accepting pivot->arg pairs two sentences apart that the base graph
   rejects (distance 4) — this is the acceptance delta the regenerated
   goldens pin (P/R vs the old base-graph goldens in BENCH/BASELINE.md)
-- fused tagged path (ONE docs pass) == unfused operators, and the fused
-  run_pipeline default == the unfused pipeline end to end."""
+- the combined doc pass (ONE docs pass) == the standalone operators, and
+  run_pipeline == the checkpointed runner's separate-stage lane end to end."""
 
 from __future__ import annotations
 
@@ -22,6 +22,7 @@ from nary_relation_extraction_decomposed_spark.operators.kernels import (
 from nary_relation_extraction_decomposed_spark.plans.pipeline import (
     PipelineConfig,
     run_pipeline,
+    run_pipeline_checkpointed,
 )
 
 MS = [
@@ -106,53 +107,6 @@ def _hrows(df):
         tuple(tuple(v) if isinstance(v, list) else v for v in r)
         for r in df.collect()
     )
-
-
-def test_fused_tagged_path_equals_unfused(spark, fixture_dir):
-    """detect_and_analyze_tagged -> doc_graph_subrels_tagged (ONE docs pass,
-    one shuffle) must emit exactly the same evidence rows as the unfused
-    detect_mentions + analyze_sentences -> doc_graph_subrels path, and the
-    mentions/sentences views must equal the unfused frames."""
-    from nary_relation_extraction_decomposed_spark.operators.graph import (
-        doc_graph_subrels,
-        doc_graph_subrels_tagged,
-    )
-    from nary_relation_extraction_decomposed_spark.operators.mentions import (
-        analyze_sentences,
-        detect_and_analyze_tagged,
-        detect_mentions,
-        mentions_view,
-        sentences_view,
-    )
-    from nary_relation_extraction_decomposed_spark.operators.textprep import (
-        dedup_latest_text,
-        filter_pages,
-        resolve_text,
-    )
-
-    pages = spark.read.parquet(os.path.join(fixture_dir, "pages.parquet"))
-    pages = pages.filter(F.xxhash64("url") % 8 == 0)
-    gaz = spark.read.parquet(os.path.join(fixture_dir, "gazetteer.parquet"))
-    docs = dedup_latest_text(resolve_text(filter_pages(pages, "en")))
-    slots = [("GENE", "a"), ("VARIANT", "b")]
-    vocab = ["inhibits", "activates", "binds", "modulates"]
-
-    ments = detect_mentions(docs, gaz)
-    sents = analyze_sentences(docs, vocab)
-    tagged = detect_and_analyze_tagged(docs, gaz, vocab)
-
-    unfused = doc_graph_subrels(ments, sents, "DRUG", slots)
-    fused = doc_graph_subrels_tagged(tagged, "DRUG", slots)
-    cols = ["url", "pivot_mid", "pivot_norm", "pivot_sent", "other_mid",
-            "other_norm", "slot", "pred", "path_len"]
-    a = {tuple(r) for r in unfused.select(*cols).collect()}
-    b = {tuple(r) for r in fused.select(*cols).collect()}
-    assert a == b and len(a) > 100
-
-    mv = {tuple(r) for r in mentions_view(tagged).collect()}
-    assert mv == {tuple(r) for r in ments.collect()} and mv
-    sv = _hrows(sentences_view(tagged))
-    assert sv == _hrows(sents) and sv
 
 
 def test_combined_pass_equals_staged_operators(spark, fixture_dir):
@@ -258,28 +212,35 @@ def test_pairs_fusion_equals_staged(spark, fixture_dir):
     assert got_dup == want_dup and len(want_dup) > len(want)
 
 
-def test_fused_pipeline_equals_unfused(spark, fixture_dir):
-    """run_pipeline's fused default == the unfused pipeline end to end
-    (triples with support)."""
+def test_fused_pipeline_equals_unfused(spark, fixture_dir, tmp_path):
+    """run_pipeline's combined doc pass == the unfused lane end to end
+    (triples with support): the checkpointed runner detects mentions,
+    analyzes sentences and builds the doc graph as separate stages."""
     pages = spark.read.parquet(os.path.join(fixture_dir, "pages.parquet"))
     pages = pages.filter(F.xxhash64("url") % 8 == 0)
     gaz = spark.read.parquet(os.path.join(fixture_dir, "gazetteer.parquet"))
     rules = spark.read.parquet(os.path.join(fixture_dir, "pred_rules.parquet"))
 
-    def triples(**cfg_kw):
-        cfg_kw.setdefault("canonicalize", False)
-        cfg = PipelineConfig(**cfg_kw)
-        df = run_pipeline(pages, gaz, rules, cfg).triples
+    def rows(df):
         return {tuple(r) for r in df.select("subj", "pred", "obj", "support").collect()}
 
-    want = triples(fused=True)
-    assert want == triples(fused=False)
+    def triples(**cfg_kw):
+        cfg_kw.setdefault("canonicalize", False)
+        return rows(run_pipeline(pages, gaz, rules, PipelineConfig(**cfg_kw)).triples)
+
+    want = triples()
+    staged, _ = run_pipeline_checkpointed(
+        pages, gaz, rules, PipelineConfig(canonicalize=False),
+        str(tmp_path / "ckpt"), corpus_fp="fixture-eighth",
+    )
+    assert staged.sentences is not None  # the separate-stage lane ran
+    assert want == rows(staged.triples) and want
     # round 6: the production fused_rejoin lane (doc_kg_pairs inside
     # run_pipeline — the configuration the bench headline measures) must
     # produce the identical triples, with and without merge-time ER
-    assert want == triples(fused=True, fused_rejoin=True)
-    assert triples(fused=True, canonicalize=True) == triples(
-        fused=True, fused_rejoin=True, canonicalize=True
+    assert want == triples(fused_rejoin=True)
+    assert triples(canonicalize=True) == triples(
+        fused_rejoin=True, canonicalize=True
     )
 
 

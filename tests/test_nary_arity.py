@@ -109,37 +109,6 @@ def test_binary_rule_table_rejects_higher_arity(spark):
         run_pipeline(pages, _gaz(spark), legacy_rules, CFG_4ARY).triples.count()
 
 
-def test_grouped_rejoin_equivalent(spark):
-    """rejoin_triples_grouped (one ObjectHashAggregate + in-array cross
-    product) must emit the identical triple set as the SMJ rejoin."""
-    from nary_relation_extraction_decomposed_spark.operators.triples import (
-        rejoin_triples,
-        rejoin_triples_grouped,
-    )
-    import pyspark.sql.functions as F
-
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    subrels = li.select(
-        F.col("l_orderkey").cast("string").alias("url"),
-        F.col("l_suppkey").cast("int").alias("pivot_mid"),
-        F.concat(F.lit("S"), F.col("l_suppkey")).alias("pivot_norm"),
-        F.concat(F.lit("P"), F.col("l_partkey")).alias("other_norm"),
-        F.when(F.col("l_linenumber") % 2 == 0, "a").otherwise("b").alias("slot"),
-        F.lit("links").alias("pred"),
-        F.concat(
-            F.lit("links#"),
-            F.when(F.col("l_linenumber") % 2 == 0, "a").otherwise("b"),
-        ).alias("subrel"),
-    )
-    rules = spark.createDataFrame(
-        [("links#a", "links#b", "links", "links.ctx")],
-        "subrel_a string, subrel_b string, pred_a string, pred_b string",
-    )
-    a = {tuple(r) for r in rejoin_triples(subrels, rules).collect()}
-    b = {tuple(r) for r in rejoin_triples_grouped(subrels, rules).collect()}
-    assert a == b and len(a) > 100
-
-
 def test_incremental_new_triples(spark):
     """Incremental run: triples from a grown corpus diffed against the
     previous snapshot = exactly the triples whose key did not exist."""

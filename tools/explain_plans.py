@@ -62,48 +62,8 @@ def main() -> None:
         f.write(pipeline_plan_evidence(spark))
         f.write(aqe_skew_join_evidence(spark))
         f.write(ivf_pruning_evidence(spark))
-        f.write(gazetteer_join_evidence(spark))
     print(f"wrote {out_path}")
     spark.stop()
-
-
-def gazetteer_join_evidence(spark) -> str:
-    """Round 4: detect_mentions_join (the no-driver-collect dictionary
-    path). What to verify: the candidate n-gram stream feeds ONE equi-join
-    against the deduped gazetteer table (Catalyst/AQE picks the strategy by
-    size — broadcast for this small fixture dict, SMJ for a 10^8-surface
-    one; no hint pinned either way), then exactly ONE
-    Exchange hashpartitioning(url) + in-partition sort feeds the greedy
-    resolution mapInPandas. No Python before candidate emission; no second
-    url shuffle."""
-    import io
-    from contextlib import redirect_stdout
-
-    from nary_relation_extraction_decomposed_spark.operators.mentions import (
-        detect_mentions_join,
-    )
-
-    docs = (
-        spark.read.parquet(f"{SF}/documents.parquet")
-        .selectExpr("cast(doc_id as string) as url", "text")
-    )
-    gaz = spark.createDataFrame(
-        [("spark", "E1", "PIV"), ("join", "E2", "ARGA")],
-        "surface_norm string, ent_id string, ent_type string",
-    )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        detect_mentions_join(docs, gaz).explain("formatted")
-    txt = buf.getvalue()
-    n_url_exchanges = txt.count("hashpartitioning(url")
-    return (
-        "\n## detect_mentions_join (round 4) — dictionary-as-table path\n\n"
-        "*Candidates -> ONE dictionary equi-join (AQE-sized, no hint) -> "
-        "ONE url exchange -> greedy-resolution mapInPandas. "
-        f"`hashpartitioning(url...)` exchanges in plan = **{n_url_exchanges}** "
-        "(must be 1).*\n\n"
-        f"```\n{txt.strip()[:4000]}\n```\n"
-    )
 
 
 def ivf_pruning_evidence(spark) -> str:
