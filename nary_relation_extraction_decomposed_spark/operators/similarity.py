@@ -45,8 +45,8 @@ def _widen_if_narrow(df: DataFrame, key_col: str) -> DataFrame:
     reuses, and it is strictly cheaper than the probe's full double
     execution — UNLESS the plan's FIRST (topmost) Exchange line is already
     `hashpartitioning(key_col, n >= defaultParallelism)` with
-    REPARTITION_BY_NUM (ADVICE r6: an input that just explicitly shuffled
-    wide on the same key was paying a second full exchange here). Only
+    REPARTITION_BY_NUM (an input that just explicitly shuffled wide on the
+    same key would otherwise pay a second full exchange here). Only
     REPARTITION_BY_NUM qualifies: it is the one AQE-exempt exchange, so its
     printed width is the runtime width. A REPARTITION_BY_COL exchange
     (repartition by column, no count) is sized by spark.sql.shuffle.
